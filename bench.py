@@ -700,7 +700,11 @@ def main() -> None:
         )
         probe = SIM.ivfpq_topk_prebuilt(
             spark, path,
-            _clustered_embeddings(emb_ids.filter(F.col("vec_id") < 5), salt=1),
+            # 5 query rows: spreading them would make the probe's
+            # toLocalIterator submit one job per (mostly empty) partition
+            _clustered_embeddings(
+                emb_ids.filter(F.col("vec_id") < 5), salt=1, spread=False
+            ),
             "embedding", "vec_id", k=5, nprobe=4,
         )
         return probe.join(

@@ -670,6 +670,12 @@ def kmeans_centroids(
     )
 
 
+# Row cap of the deterministic driver training sample (_collect_sample):
+# the train_cap default of every sample-trained model, and the cap the
+# fused PQ sample of _ann_index_write_body replays.
+_TRAIN_CAP = 65_536
+
+
 def _collect_sample(
     corpus: DataFrame,
     vec_col: str,
@@ -743,7 +749,7 @@ def sample_kmeans_centroids(
     num_cells: int,
     iters: int = 5,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
     normalize: bool = False,
 ) -> DataFrame:
     """Centroids via the faiss/ScaNN training pattern: a deterministic
@@ -1063,7 +1069,7 @@ def _ann_index_write_body(
     if fused is not None:
         spark = corpus.sparkSession
         centroids = _kmeans_local(spark, fused, num_cells, train_iters, "cosine")
-        pq_sample = _fused_pq_sample(fused, cap=65536)
+        pq_sample = _fused_pq_sample(fused, cap=_TRAIN_CAP)
         assigned = _assign_cells(
             corpus.select(
                 F.col(id_col).alias("id"),
@@ -1212,7 +1218,8 @@ def _fused_pq_sample(rows, cap: int):
     driver from _fused_train_rows' output: ascending-id order, capped,
     each vector divided by its JVM-computed norm (identical IEEE
     division; zero-norm rows pass through raw, normalize_vectors'
-    guard)."""
+    guard, whose ``nrm > 0`` holds for a NaN norm under Spark's NaN
+    ordering)."""
     import numpy as np
 
     rows = sorted(rows, key=lambda r: r["id"])[:cap]
@@ -1220,7 +1227,7 @@ def _fused_pq_sample(rows, cap: int):
     for i, r in enumerate(rows):
         v = np.asarray(r["cv"], dtype=np.float64)
         n = r["nrm"]
-        out[i] = v / n if n and n > 0.0 else v
+        out[i] = v / n if n is not None and (n > 0.0 or n != n) else v
     return out
 
 
@@ -1291,7 +1298,7 @@ def pq_codebooks_residual(
     codebook_k: int = 16,
     train_iters: int = 2,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
 ):
     """PQ codebooks over IVF RESIDUALS (the FAISS IVFx,PQy default,
     by_residual=True): each sampled unit vector is assigned to its
@@ -2119,7 +2126,7 @@ def kcenter_select(
     id_col: str,
     k: int = 16,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
 ) -> tuple[DataFrame, DataFrame]:
     """Greedy k-center coreset selection (Gonzalez 1985, the 2-approx
     farthest-point heuristic) — the "pick k maximally diverse
@@ -2718,7 +2725,7 @@ def pq_codebooks(
     codebook_k: int = 16,
     train_iters: int = 2,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
     _sample=None,
 ):
     """Train product-quantization codebooks (Jégou, Douze, Schmid,

@@ -47,6 +47,14 @@ KEY = "key"
 
 _ARROW_SCALARS = (int, float, str, bool, bytes)
 
+# Rows per partition of a driver-list source (from_slice/from_map).
+# Measured with the F1 chain (4 Python stages, 2 error sinks) on a
+# 4-core local[4] session: 1 partition beats 2 up to 40,000 rows
+# (3.3 s vs 3.7 s), 2 beat 1 from 80,000 (4.6 s vs 4.9 s; 6.0 s vs
+# 7.9 s at 160,000). Heavier stage functions pay for a split sooner;
+# Stage.repartition(n) spreads a short list explicitly.
+ROWS_PER_SPLIT = 50_000
+
 
 def _driver_rows_df(spark, rows, colnames, struct_schema):
     """Driver-values source table (FromSlice/FromMap backing).
@@ -67,7 +75,17 @@ def _driver_rows_df(spark, rows, colnames, struct_schema):
     error; Arrow would coerce); all-None columns (classic raises
     CANNOT_DETERMINE_TYPE); empty input (classic raises "can not
     infer schema"). Each divergence is pinned by a test_from_slice_*
-    case."""
+    case.
+
+    Partitioning is sized by row count, not by core count: the table
+    gets ``min(defaultParallelism, ceil(rows / ROWS_PER_SPLIT))``
+    partitions (at least one). Both builders spread the rows over
+    ``defaultParallelism`` slices, and every slice downstream of a
+    Python stage is a task with its own worker round trip; for a
+    driver list that is pure fixed cost (a sum over the F1 chain on
+    1,007 rows ran 25 tasks over 8 partitions, 4 over one). Lists
+    above ``defaultParallelism × ROWS_PER_SPLIT`` rows keep the full
+    spread."""
     simple = (
         struct_schema is None
         and bool(rows)
@@ -83,6 +101,7 @@ def _driver_rows_df(spark, rows, colnames, struct_schema):
             if len(types) != 1:  # mixed OR all-None column
                 simple = False
                 break
+    df = None
     if simple:
         try:
             import pandas as pd
@@ -101,12 +120,17 @@ def _driver_rows_df(spark, rows, colnames, struct_schema):
                 columns=list(colnames),
             )
             with arrow_conversion(spark):
-                return spark.createDataFrame(pdf)
+                df = spark.createDataFrame(pdf)
         except Exception:
             pass  # fall through to the classic path on any Arrow gap
-    if struct_schema is not None:
-        return spark.createDataFrame(rows, struct_schema)
-    return spark.createDataFrame(rows, list(colnames))
+    if df is None:
+        df = spark.createDataFrame(
+            rows, struct_schema if struct_schema is not None else list(colnames)
+        )
+    splits = max(1, -(-len(rows) // ROWS_PER_SPLIT))
+    if splits < spark.sparkContext.defaultParallelism:
+        df = df.coalesce(splits)  # narrow merge of the slices, no shuffle
+    return df
 
 
 def _native_reduce_df(df: DataFrame, value_col: str, fn: Callable[[Column, Column], Column]) -> DataFrame:
@@ -407,7 +431,13 @@ class Pipeline:
         """FromSlice (pipeline/pipeline.go:101-110): emit each element.
 
         Values become a one-column (``value``) DataFrame; schema inferred
-        by createDataFrame unless given explicitly.
+        by createDataFrame unless given explicitly. The frame has one
+        partition per ``ROWS_PER_SPLIT`` values, at most
+        ``defaultParallelism`` (see _driver_rows_df): a short list runs
+        as one task per stage instead of a task per core, because a
+        driver list is too small to pay for the fan-out. Python stage
+        functions chained on it run once per element per action (see
+        _columnize).
         """
         pipeline = cls(spark, config)
         values = list(values)
@@ -618,7 +648,16 @@ def _columnize(
     JVM-side in whole-stage codegen. Slow path: pandas UDF (Arrow
     batches; fn receives/returns a pandas Series) or row UDF. ``safe``
     wraps the python fn in try/except→None (for *WithError* variants,
-    transform/transform.go:52-64)."""
+    transform/transform.go:52-64).
+
+    Every Python UDF built here is marked nondeterministic, so a stage
+    function runs once per element per action. A deterministic UDF is
+    an expression Catalyst may copy: the error-tagging ``IS NOT NULL``
+    filters of map_with_error are pushed through the projection that
+    computes the UDF, inlining a second copy into the filter (the F1
+    chain planned 8 Python evaluations for its 4 Python stages). The
+    nondeterministic marker is the same single-evaluation barrier
+    operators/dedup.py uses for its sketch UDFs."""
     if isinstance(fn, Column):
         return fn
     if isinstance(fn, str):
@@ -648,16 +687,19 @@ def _columnize(
                     except Exception:
                         return None
                 return s.map(one)
-            return pandas_udf(series_fn, return_type)(in_col)
-        return pandas_udf(fn, return_type)(in_col)
-    if safe:
+            udf = pandas_udf(series_fn, return_type)
+        else:
+            udf = pandas_udf(fn, return_type)
+    elif safe:
         def safe_fn(x):  # pragma: no cover - executor side
             try:
                 return fn(x)
             except Exception:
                 return None
-        return F.udf(safe_fn, return_type)(in_col)
-    return F.udf(fn, return_type)(in_col)
+        udf = F.udf(safe_fn, return_type)
+    else:
+        udf = F.udf(fn, return_type)
+    return udf.asNondeterministic()(in_col)
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,14 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "pippin-spark", cpus: int | None = None) -> SparkSession:
+def get_spark(
+    app_name: str = "pippin-spark",
+    cpus: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """The engine's session. ``extra_conf`` entries are applied after
+    the defaults (and so override them) — e.g. event logging for
+    tools/stage_metrics.py."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     builder = (
@@ -56,4 +63,6 @@ def get_spark(app_name: str = "pippin-spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
+    for key, value in (extra_conf or {}).items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -47,6 +47,17 @@ def test_group_by(spark):
     }  # pippin_test.go:2010-2013
 
 
+def test_group_by_python_key_fn(spark):
+    # a key fn that is not a Column expression runs as a (single-
+    # evaluation, nondeterministic) row UDF; grouping must not change
+    parity = lambda x: "even" if x % 2 == 0 else "odd"
+    want = {"even": [2, 4], "odd": [-3, 1, 5]}
+    g = Pipeline.from_slice(spark, VALS).group_by(parity, return_type=T.StringType())
+    assert {k: sorted(v) for k, v in g.to_dict().items()} == want
+    fut = Pipeline.from_slice(spark, VALS).group_by_async(parity, T.StringType())
+    assert {k: sorted(v) for k, v in fut.get().items()} == want
+
+
 def test_reduce_native_and_python(spark):
     assert Pipeline.from_slice(spark, VALS).reduce(lambda a, b: a + b) == 9
     # force the generic (RDD treeReduce) path with a non-Column fn

@@ -158,6 +158,39 @@ def test_from_map_matches_classic(spark):
     )
 
 
+@pytest.mark.parametrize("source", ["slice", "slice-classic", "map"])
+def test_driver_rows_partitions_follow_row_count(spark, monkeypatch, source):
+    from pyspark.sql import types as T
+
+    import pippin_spark.pipeline as PL
+
+    # ROWS_PER_SPLIT rows or fewer: one partition; one more row: two;
+    # past defaultParallelism splits: the builder's own spread (both
+    # builders, Arrow and classic, go through the rule)
+    monkeypatch.setattr(PL, "ROWS_PER_SPLIT", 4)
+    par = spark.sparkContext.defaultParallelism
+    tokens = ["1", "a", "2", "-3", "4", "5", "b", "7"] * par
+
+    def run(n):
+        toks = tokens[:n]
+        errs = []
+        if source == "map":
+            src = PL.Pipeline.from_map(spark, dict(enumerate(toks)))
+        else:
+            schema = T.StringType() if source == "slice-classic" else None
+            src = PL.Pipeline.from_slice(spark, toks, schema=schema)
+        parts = src.df.rdd.getNumPartitions()
+        total = src.map_with_error(int, errs.append, return_type=T.LongType()).sum()
+        want = sum(int(t) for t in toks if t.lstrip("-").isdigit())
+        assert total == want
+        assert sorted(errs) == sorted(t for t in toks if not t.lstrip("-").isdigit())
+        return parts
+
+    assert run(4) == 1
+    assert 1 < run(5) <= par
+    assert run(4 * par + 1) == par
+
+
 def test_from_slice_arrow_conf_restored(spark):
     from pippin_spark.pipeline import Pipeline
 

@@ -211,6 +211,50 @@ def test_pq_codebooks_sized_to_trained_k(spark):
     assert {r["neighbor_id"] for r in out} == {2, 3}
 
 
+def test_fused_pq_sample_matches_collect_sample(spark, monkeypatch, tmp_path):
+    # the fused training collect of ann_index_write replays
+    # _collect_sample(train_mod=1, normalize=True) on the driver; the
+    # sample must be bit-identical (ids out of order, a zero-norm row
+    # and a NaN row included), and a corpus past _KMEANS_LOCAL_MAX
+    # must take the unfused path and train the same codebooks
+    import numpy as np
+
+    rows = [
+        (i, [float((i * 7 + j) % 11) - 5.0 for j in range(8)])
+        for i in range(40, 0, -1)
+    ]
+    rows += [(0, [0.0] * 8), (41, [1.0] * 7 + [float("nan")])]
+    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+    def unfused(cap):
+        return S._collect_sample(
+            corpus, "embedding", "vec_id", train_mod=1, train_cap=cap,
+            normalize=True,
+        )
+
+    fused = S._fused_train_rows(corpus, "embedding", "vec_id")
+    for cap in (S._TRAIN_CAP, 7):
+        got, want = S._fused_pq_sample(fused, cap=cap), unfused(cap)
+        assert got.shape == want.shape
+        finite = np.isfinite(want).all(axis=1)
+        assert got[finite].tobytes() == want[finite].tobytes()
+        assert np.array_equal(got, want, equal_nan=True)
+
+    finite_corpus = corpus.filter(F.col("vec_id") != 41)
+    books = []
+    for name in ("fused", "fallback"):
+        if name == "fallback":
+            monkeypatch.setattr(S, "_KMEANS_LOCAL_MAX", 10)
+            assert S._fused_train_rows(finite_corpus, "embedding", "vec_id") is None
+        path = str(tmp_path / name)
+        S.ann_index_write(
+            finite_corpus, "embedding", "vec_id", path, num_cells=4,
+            train_iters=2, layout="flat", pq=(2, 4, 2),
+        )
+        books.append(S._read_codebooks(spark, path)[0])
+    assert books[0].tobytes() == books[1].tobytes()
+
+
 def test_text_ops(spark, docs):
     out = docs.select(
         "doc_id",

@@ -80,6 +80,30 @@ def test_minhash_single_udf_eval(spark):
     assert count_nodes(p, "ArrowEvalPython") == 2
 
 
+def test_pipeline_python_stage_single_eval(spark):
+    # the same barrier on pipeline stages: without it Catalyst pushes
+    # each error-tagging IS NOT NULL filter through the UDF projection
+    # and inlines a second UDF copy (8 nodes for the F1 chain's 4 Python
+    # stages, 5 for its second error sink's 3)
+    from pyspark.sql import types as T
+
+    from pippin_spark import Pipeline
+    from test_e2e_canonical import build
+
+    stage = build(spark, on_error=lambda e: None)
+    assert count_nodes(plan(stage.sum_df()), "BatchEvalPython") == 4
+    # sinks in chain order: map_with_error(int), flat_map_with_error(+1)
+    second = stage.pipeline._error_sinks[1].df
+    assert count_nodes(plan(second), "BatchEvalPython") == 3
+    halved = (
+        Pipeline.from_slice(spark, [1.0, 2.0, 3.0])
+        .map(lambda s: s * 0.5, return_type=T.DoubleType(), pandas=True)
+        .filter(F.col("value") > 0.6)
+    )
+    assert count_nodes(plan(halved.df), "ArrowEvalPython") == 1
+    assert sorted(r[0] for r in halved.df.collect()) == [1.0, 1.5]
+
+
 def test_simhash_single_udf_eval(spark):
     # one fused text→signature Arrow stage + one mapInPandas verify
     # stage; no distinct (pairs are emitted exactly once)
